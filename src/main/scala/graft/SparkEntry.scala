@@ -38,7 +38,6 @@ object SparkEntry {
     "q199_lm_table_serve", "q198_lm_table_append", "q278_lm_table_retract",
     "q224_hybrid_batch_from_tables", "q217_hybrid_from_tables",
     "q218_bm25_batch_from_tables", "q175_bm25_index_serve",
-    "q405_minhash_stored_delete", "q404_winnow_stored_delete",
     "q234_bpe_table_encode", "q421_minhash_snapshot_delete")
 
   /** Full catalog, in stable order. */

@@ -135,87 +135,13 @@ object AnnIndex {
     * contribution — same caveat class as [[ParaIndex]]'s election tables;
     * removing the training influence entirely means a retrain ([[build]]).
     * Scale shape: an id-only anti join against the posting lists (the
-    * removed-id set broadcasts in the common case).
+    * removed-id set broadcasts in the common case). The same filter made
+    * true in the stored bytes is [[SnapTables.deleteByKey]] on the
+    * cluster-partitioned codes table (`cluster`/`vid`; q413, q403).
     */
   def delete(idx: IvfPqIndex, removedIds: DataFrame): IvfPqIndex =
     idx.copy(codes = idx.codes
       .join(removedIds.select(col("vid")), Seq("vid"), "left_anti"))
-
-  /** [[delete]] made true in the STORED bytes — the right-to-be-forgotten
-    * path a view-filter cannot satisfy: [[delete]] anti-joins the in-memory
-    * frame, but the parquet under `path/codes` still holds every removed
-    * vector's rows until they are rewritten out. This rewrites ONLY the
-    * cluster partitions that actually contain a removed vector (dynamic
-    * partition overwrite — the same idempotence recipe as the streaming
-    * maintenance delta), so the I/O is bounded by the affected cells, not
-    * the corpus: at 100 TB an index with thousands of cells rewrites the
-    * handful holding the removal set and never touches the rest.
-    *
-    * Two bounded driver transfers, both capped by the coarse cell count
-    * (model-scale, the k-rows doctrine): the affected-cluster set and the
-    * survivor-cluster set. The second exists because dynamic overwrite only
-    * replaces partitions PRESENT in the write — a cell whose every vector
-    * was removed emits no rows and would silently keep its stale directory;
-    * those directories are dropped explicitly.
-    *
-    * Model tables stay frozen on disk (same caveat as [[delete]]: removing
-    * the training influence means a retrain). q398 hash-proves the re-read
-    * post-delete serve against a survivors-only relational replay;
-    * AnnIndexSpec asserts the removed vids are gone from the stored parquet
-    * itself and that unaffected partitions keep their original files.
-    *
-    * Serving-concurrency contract (same stance as [[compact]]): do NOT
-    * serve from the index while the rewrite runs — a concurrent reader can
-    * fail mid-scan as affected-partition files are replaced, and between
-    * the overwrite and the explicit emptied-cell drops it can still read
-    * removed vids out of a fully-emptied cell. If the process crashes
-    * between those two steps, re-run the SAME delete: the overwrite is
-    * idempotent (survivors rewrite to identical content) and the re-run
-    * completes the directory drops.
-    */
-@deprecated("publish the table through SnapTables and delete via its generation-flip twin — the in-place overwrite invalidates concurrent serves (kept as q404-q411 oracle heritage)", "round 19")
-  def deleteStored(spark: SparkSession, path: String, removedIds: DataFrame): Unit = {
-    val codesPath = s"$path/codes"
-    val codes = spark.read.parquet(codesPath)
-    // no broadcast HINT on the removal set: a typical right-to-be-forgotten
-    // batch is small and AQE broadcasts it on its own, but a bulk purge
-    // (court order over a whole source) must degrade to a shuffled
-    // semi/anti join instead of OOMing a forced broadcast
-    val rm = removedIds.select(col("vid"))
-    val affected = codes.join(rm, Seq("vid"), "left_semi")
-      .select(col("cluster")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (affected.isEmpty) return
-    // survivors of ONLY the affected cells, materialized BEFORE the
-    // overwrite: Spark (correctly) refuses to overwrite a path its plan is
-    // still reading, and the checkpoint also bounds the rewrite read to the
-    // affected partitions (partition pruning on the isin filter)
-    val survivors = codes
-      .where(col("cluster").isin(affected: _*))
-      .join(rm, Seq("vid"), "left_anti")
-      .select(col("vid"), col("codes"), col("cluster"))
-      .localCheckpoint()
-    val still = survivors.select(col("cluster")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val hp = new org.apache.hadoop.fs.Path(codesPath)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    // fail BEFORE mutating if the removal would empty the whole index: zero
-    // surviving cells means zero parquet files under codes/, which the next
-    // read rejects with an opaque schema-inference error far from the cause
-    val existing = fs.listStatus(hp).map(_.getPath.getName)
-      .filter(_.startsWith("cluster="))
-      .map(_.stripPrefix("cluster=").toInt).toSet
-    require((existing -- (affected.toSet -- still)).nonEmpty,
-      "deleteStored: the removal set covers every indexed vector — an empty " +
-        "index has no readable codes table; drop the index directory instead")
-    survivors.repartition(col("cluster")) // whole-cell files, not × tasks
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cluster").parquet(codesPath)
-    affected.filterNot(still).foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$codesPath/cluster=$c"), true)
-    }
-  }
 
   /** Fold a streaming-maintenance delta (batch_id-partitioned encode output,
     * [[graft.streaming.Pipelines.annIndexMaintenance]]) into the stored
@@ -236,8 +162,7 @@ object AnnIndex {
     * re-running compact over a replayed delta cannot duplicate posting
     * rows and a re-encoded vector never serves twice. The rewrite touches
     * only the cluster partitions that received delta rows or held a stale
-    * row of a delta vid (bounded by the cell count — the [[deleteStored]]
-    * shape).
+    * row of a delta vid (bounded by the cell count, never the corpus).
     * Run it between stream runs, not concurrently with one: a live stream
     * writing new batch partitions while the delta directory is being
     * consumed would lose them. That contract is MECHANICAL where the delta
@@ -355,7 +280,7 @@ object AnnIndex {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("cluster").parquet(codesPath)
       // a cell whose ONLY rows were stale cross-cluster residents emits no
-      // rows in the rewrite — drop its directory, the deleteStored rule
+      // rows in the rewrite — drop its directory, or it would keep stale files
       val still = merged.select(col("cluster")).distinct()
         .collect().map(_.getInt(0)).toSet
       val hp = new org.apache.hadoop.fs.Path(codesPath)

@@ -82,9 +82,10 @@ object LmIndex {
   val DefaultWordBuckets = 64
 
   /** Persist both tables under `path` (uni/, big/), partitioned by the
-    * (leading-)word hash bucket so a retraction rewrites only the buckets
-    * the removed docs' vocabulary occupies ([[deleteStored]]), never the
-    * whole vocabulary-scale file set.
+    * (leading-)word hash bucket — the layout [[deleteSnapshot]] expects of
+    * a snapshot-published pair, where a retraction rewrites only the
+    * buckets the removed docs' vocabulary occupies, never the whole
+    * vocabulary-scale file set.
     */
   def write(tbl: LmTables, path: String,
       wordBuckets: Int = DefaultWordBuckets): Unit = {
@@ -103,64 +104,57 @@ object LmIndex {
   /** Load stored tables (scan-only lineage), projected back to the logical
     * columns so a read table composes with [[append]]/[[retract]] exactly
     * like a built one (the `wb` partition column stays a physical-layout
-    * concern; [[deleteStored]] reads it from the raw parquet itself).
+    * concern).
     */
   def read(spark: SparkSession, path: String): LmTables =
     LmTables(
       spark.read.parquet(s"$path/uni").select(col("w"), col("c1")),
       spark.read.parquet(s"$path/big").select(col("w1"), col("w2"), col("c2")))
 
-  /** [[retract]] made true in the STORED bytes: count the removed docs
-    * alone and SUBTRACT per key inside the stored parquet via
-    * [[StoredTables.decrementCounts]] — both tables are ADDITIVE (the
-    * [[append]] law run backwards), so the decremented storage equals a
-    * rebuild on the remaining corpus exactly, and every later
-    * [[score]]/[[read]] serves a model that never trained on the removed
-    * docs (q409 hash-proves it through the scoring surface). Only the `wb`
-    * buckets holding the removed docs' vocabulary rewrite; keys reaching
-    * zero drop; an over-retraction or a retraction of never-trained text
-    * fails loudly BEFORE mutating (the decrementCounts guards) — the
-    * double-submitted-batch safety an in-memory [[retract]] cannot give.
+  /** [[retract]] made true in the STORED bytes of a snapshot-published
+    * table pair (`path/uni` and `path/big`, both partitioned by `wb`):
+    * count the removed docs alone and SUBTRACT per key via
+    * [[SnapTables.decrementCounts]] — both tables are ADDITIVE (the
+    * [[append]] law run backwards), so the decremented generations equal a
+    * rebuild on the remaining corpus exactly, and every later [[score]]
+    * serves a model that never trained on the removed docs (q427
+    * hash-proves it through the scoring surface). Only the `wb` buckets
+    * holding the removed docs' vocabulary rewrite; keys reaching zero drop;
+    * an over-retraction or a retraction of never-trained text fails loudly
+    * BEFORE publishing — the double-submitted-batch safety an in-memory
+    * [[retract]] cannot give.
     *
-    * Same serving-concurrency contract as [[AnnIndex.deleteStored]]. The
-    * decrement is NOT idempotent across the two tables, and for words
-    * shared with surviving documents a re-applied decrement lands SILENTLY
-    * (the guards catch only full-retraction and over-retraction shapes) —
-    * so a crash after the uni rewrite but before big is repaired by ONE
-    * guarded call to [[repairBig]] (which applies the BIG-side decrement
-    * alone); never by re-running the full delete, which would subtract uni
-    * twice.
+    * The two tables publish as two generation flips, uni first. A crash
+    * between them is repaired by ONE guarded call to [[repairBig]], never
+    * by re-running the full delete: for words shared with surviving
+    * documents a re-applied uni decrement lands SILENTLY (the guards catch
+    * only full-retraction and over-retraction shapes). Returns the big
+    * table's generation now serving.
     */
-@deprecated("publish the table through SnapTables and delete via its generation-flip twin — the in-place overwrite invalidates concurrent serves (kept as q404-q411 oracle heritage)", "round 19")
-  def deleteStored(spark: SparkSession, path: String, removed: DataFrame,
-      id: Column, text: Column): Unit = {
-    val d = build(removed, id, text)
-    StoredTables.decrementCounts(spark, s"$path/uni", "wb", Seq("w"), "c1",
-      d.uni.withColumnRenamed("c1", "__dec"))
-    StoredTables.decrementCounts(spark, s"$path/big", "wb", Seq("w1", "w2"), "c2",
-      d.big.withColumnRenamed("c2", "__dec"))
+  def deleteSnapshot(spark: SparkSession, path: String, removed: DataFrame,
+      id: Column, text: Column): Int = {
+    SnapTables.decrementCounts(spark, s"$path/uni", "wb", Seq("w"), "c1",
+      build(removed, id, text).uni.withColumnRenamed("c1", "__dec"))
+    repairBig(spark, path, removed, id, text)
   }
 
-  /** Crash repair for [[deleteStored]]'s one partial state: the uni
-    * rewrite landed, the process died before the big rewrite. Recounts the
-    * removed docs' BIGRAM deltas and applies that half alone — the same
-    * idempotent-rebuild role [[WinnowIndex.rebuildDfTable]] and
-    * [[MinHashIndex.rebuildBucketDf]] play for their families, so the
-    * trickiest half-retracted repair is a guarded call, not a prose
-    * recipe. The [[StoredTables.decrementCounts]] guards still apply: if
-    * the big side was ALREADY decremented (i.e. the delete actually
-    * completed) the repair fails loudly on the first fully-retracted
-    * bigram key ("never counted") rather than silently double-subtracting
-    * — only bigrams every one of whose occurrences survives elsewhere in
-    * the corpus could slip that guard, the exact residual risk the
-    * deleteStored scaladoc documents for re-running ANY decrement.
+  /** Crash repair for [[deleteSnapshot]]'s one partial state: the uni flip
+    * landed, the process died before the big flip. Recounts the removed
+    * docs' BIGRAM deltas and publishes that half alone — the role
+    * [[WinnowIndex.rebuildDfTable]] and [[MinHashIndex.rebuildBucketDf]]
+    * play for their families, so the half-retracted repair is a guarded
+    * call, not a prose recipe. The [[SnapTables.decrementCounts]] guards
+    * still apply: if the big side was ALREADY decremented (the delete
+    * actually completed) the repair fails loudly on the first
+    * fully-retracted bigram key ("never counted") rather than silently
+    * double-subtracting — only bigrams every one of whose occurrences
+    * survives elsewhere in the corpus could slip that guard. Returns the
+    * big table's generation now serving.
     */
   def repairBig(spark: SparkSession, path: String, removed: DataFrame,
-      id: Column, text: Column): Unit = {
-    val d = build(removed, id, text)
-    StoredTables.decrementCounts(spark, s"$path/big", "wb", Seq("w1", "w2"), "c2",
-      d.big.withColumnRenamed("c2", "__dec"))
-  }
+      id: Column, text: Column): Int =
+    SnapTables.decrementCounts(spark, s"$path/big", "wb", Seq("w1", "w2"), "c2",
+      build(removed, id, text).big.withColumnRenamed("c2", "__dec"))
 
   /** Score documents from the STORED tables — [[Text.bigramLmScore]]'s
     * exact arithmetic through the shared [[Text.lmScoreFromCounts]] tree;

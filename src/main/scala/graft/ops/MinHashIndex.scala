@@ -119,65 +119,16 @@ object MinHashIndex {
       .select(col("band"), col("band_sig"), col("df"))
 
   /** Rebuild the stored bucket-size table from the stored BANDS — the
-    * crash-recovery verb for [[deleteStored]]: the bucket-df table is a
-    * pure function of the band table, so recomputing it from the surviving
-    * stored rows is always correct, index-bounded, and idempotent — unlike
-    * a re-applied decrement.
+    * repair for any bucket-df doubt (a crash between the band and df
+    * writes, or a decrement whose fate is unknown): the bucket-df table is
+    * a pure function of the band table, so recomputing it from the stored
+    * rows is always correct, index-bounded, and idempotent — unlike a
+    * re-applied decrement.
     */
   def rebuildBucketDf(spark: SparkSession, path: String,
       sigBuckets: Int = DefaultSigBuckets): Unit =
     writeBucketDf(readBands(spark, path)
       .select(col("doc_id"), col("band"), col("band_sig")), path, sigBuckets)
-
-  /** [[delete]] made true in the STORED bytes — the right-to-be-forgotten
-    * path for this index's three tables, all via the shared
-    * [[StoredTables]] recipe (affected-partition dynamic overwrite,
-    * emptied-directory drop, whole-table fail-fast):
-    *
-    *  - `sigs` and `bands` are strictly per-document (the locality that
-    *    makes [[append]] exact), so each deletes by exact key filter
-    *    ([[StoredTables.deleteByKey]]) — sigs rewrites only the removal
-    *    set's `db` buckets, bands only the `sb` buckets its band
-    *    signatures occupy;
-    *  - `bucketdf` (when present at `path/bucketdf`) is ADDITIVE under
-    *    append, so it retracts by exact subtraction
-    *    ([[StoredTables.decrementCounts]]) of the removed docs' own bucket
-    *    contributions — read from the stored bands BEFORE they are
-    *    rewritten, never from corpus text. Buckets decremented to zero drop
-    *    entirely, so the serve-path mega-bucket guard sees exactly the
-    *    post-delete occupancy a survivors-only rebuild would produce (q405
-    *    hash-proves the served matches, guard included).
-    *
-    * Same serving-concurrency contract as [[AnnIndex.deleteStored]]: do not
-    * serve while the rewrite runs. Each per-table rewrite is idempotent,
-    * but the df DECREMENT is not — and for buckets shared with survivors a
-    * re-applied decrement lands SILENTLY (the decrementCounts guards catch
-    * only full-retraction and over-retraction shapes). A crash AFTER the
-    * decrement but before the key deletes is repaired by (1) re-running
-    * with `maintainBucketDf = false` to finish the idempotent key-filter
-    * rewrites, then (2) [[rebuildBucketDf]] if any doubt remains about the
-    * df bytes — recomputing the side table from the surviving bands is
-    * idempotent and index-bounded; never re-run the full delete.
-    */
-@deprecated("publish the table through SnapTables and delete via its generation-flip twin — the in-place overwrite invalidates concurrent serves (kept as q404-q411 oracle heritage)", "round 19")
-  def deleteStored(spark: SparkSession, path: String,
-      removedIds: DataFrame, maintainBucketDf: Boolean = true): Unit = {
-    val rm = removedIds.select(col("doc_id"))
-    val bucketDfPath = new org.apache.hadoop.fs.Path(s"$path/bucketdf")
-    val fs = bucketDfPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (maintainBucketDf && fs.exists(bucketDfPath)) {
-      // the decrement is the removed docs' own band rows, aggregated —
-      // exact because every band row of a doc is that doc's alone
-      val dec = spark.read.parquet(s"$path/bands")
-        .join(rm, Seq("doc_id"), "left_semi")
-        .groupBy(col("band"), col("band_sig"))
-        .agg(count(lit(1)).as("__dec"))
-      StoredTables.decrementCounts(spark, s"$path/bucketdf", "sb",
-        Seq("band", "band_sig"), "df", dec)
-    }
-    StoredTables.deleteByKey(spark, s"$path/bands", "sb", "doc_id", rm)
-    StoredTables.deleteByKey(spark, s"$path/sigs", "db", "doc_id", rm)
-  }
 
   /** Bucket-size side table over a band frame: (band, band_sig, df) with
     * df = number of documents hashing into the bucket — the statistic the

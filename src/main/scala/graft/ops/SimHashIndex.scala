@@ -71,24 +71,6 @@ object SimHashIndex {
   def readKeys(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/keys")
 
-  /** Storage-truth document removal: every key row is strictly
-    * per-document (one doc's fingerprint, pigeonhole-expanded — the
-    * locality that makes [[append]] exact), so deletion is an exact key
-    * filter rewritten into the stored bytes via
-    * [[StoredTables.deleteByKey]] — only the `kb` buckets the removed
-    * docs' combo keys occupy rewrite; emptied buckets drop their
-    * directories; a removal emptying the whole table fails before
-    * mutating. The serve path's optional mega-bucket guard re-derives from
-    * post-delete occupancy, so a served match set equals an index that
-    * never saw the removed docs (q406 hash-proves it). Same
-    * serving-concurrency contract as [[AnnIndex.deleteStored]].
-    */
-@deprecated("publish the table through SnapTables and delete via its generation-flip twin — the in-place overwrite invalidates concurrent serves (kept as q404-q411 oracle heritage)", "round 19")
-  def deleteStored(spark: SparkSession, path: String,
-      removedIds: DataFrame): Unit =
-    StoredTables.deleteByKey(spark, s"$path/keys", "kb", "doc_id",
-      removedIds.select(col("doc_id")))
-
   /** Match a probe document batch against the STORED key table — the serve
     * path of a Hamming-distance ingest gate. Probes are fingerprinted with
     * the PER-ROW native [[Dedup.simhash60]] (bit-identical to the grouped

@@ -63,9 +63,9 @@ object TextIndex {
 
   /** Persist the index; postings partitioned by the token hash-bucket,
     * doclens by the doc-id bucket — the second partitioning exists for the
-    * DELETE path ([[deleteStored]]): a removal set touches only its docs'
-    * `db` directories, so the length table rewrites a bounded partition
-    * subset instead of the whole (corpus-cardinality) file set.
+    * DELETE path ([[SnapTables.deleteByKey]], q425): a removal set touches
+    * only its docs' `db` partitions, so the length table rewrites a bounded
+    * partition subset instead of the whole (corpus-cardinality) file set.
     */
   def write(idx: Bm25Index, path: String,
       tokenBuckets: Int = DefaultTokenBuckets): Unit = {
@@ -86,7 +86,7 @@ object TextIndex {
   /** Load a stored index (scan-only lineage). Projected back to the logical
     * columns so a read index composes with [[append]]'s unions exactly like
     * a built one (the stored partition columns stay physical-layout
-    * concerns; [[deleteStored]] reads them from the raw parquet itself).
+    * concerns).
     */
   def read(spark: SparkSession, path: String): Bm25Index =
     Bm25Index(
@@ -94,34 +94,6 @@ object TextIndex {
         .select(col("tok"), col("doc_id"), col("tf")),
       doclens = spark.read.parquet(s"$path/doclens")
         .select(col("doc_id"), col("dl")))
-
-  /** Storage-truth document removal — the right-to-be-forgotten path a
-    * view-level filter cannot satisfy: both stored tables are strictly
-    * PER-DOCUMENT (a posting row derives from its own doc's token stream, a
-    * doclens row from its own doc's length — the locality that makes
-    * [[append]] exact), so deletion is an exact key filter rewritten into
-    * the stored bytes via [[StoredTables.deleteByKey]] (affected-partition
-    * dynamic overwrite, emptied-directory drop, whole-table fail-fast).
-    *
-    * Serve-time corpus statistics (N, total_dl, per-term df) derive from
-    * the stored tables, so after this rewrite every [[searchBM25]] scores
-    * exactly as an index that NEVER SAW the removed docs — no stats
-    * retraction step exists to forget (q408 hash-proves the post-delete
-    * serve against a survivors-only corpus scan).
-    *
-    * I/O shape: postings of one document spread across its terms' hash
-    * buckets, so a broad removal set rewrites most `tb` partitions — the
-    * honest cost of a term-major layout (the serve path's pruning
-    * direction); doclens rewrites only the removal set's `db` buckets.
-    * Same serving-concurrency contract as [[AnnIndex.deleteStored]].
-    */
-@deprecated("publish the table through SnapTables and delete via its generation-flip twin — the in-place overwrite invalidates concurrent serves (kept as q404-q411 oracle heritage)", "round 19")
-  def deleteStored(spark: SparkSession, path: String,
-      removedIds: DataFrame): Unit = {
-    val rm = removedIds.select(col("doc_id"))
-    StoredTables.deleteByKey(spark, s"$path/postings", "tb", "doc_id", rm)
-    StoredTables.deleteByKey(spark, s"$path/doclens", "db", "doc_id", rm)
-  }
 
   /** BM25 top-k from the STORED tables alone: postings filtered to the
     * query terms (the filter rides to the scan; on a written index the

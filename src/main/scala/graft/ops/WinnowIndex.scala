@@ -87,55 +87,15 @@ object WinnowIndex {
     spark.read.parquet(path).select(col("h"), col("df"))
 
   /** Rebuild the stored df side table from the stored FINGERPRINTS — the
-    * crash-recovery verb for [[deleteStored]] (and the general repair for
-    * any df-table doubt): the df table is a pure function of the
-    * fingerprint table, so recomputing it from the surviving stored rows is
-    * always correct, costs one pass over the INDEX (never the corpus), and
-    * is idempotent — unlike a re-applied decrement.
+    * repair for any df-table doubt (a crash between the fingerprint and df
+    * writes, or a decrement whose fate is unknown): the df table is a pure
+    * function of the fingerprint table, so recomputing it from the stored
+    * rows is always correct, costs one pass over the INDEX (never the
+    * corpus), and is idempotent — unlike a re-applied decrement.
     */
   def rebuildDfTable(spark: SparkSession, fpPath: String, dfPath: String,
       hashBuckets: Int = DefaultHashBuckets): Unit =
     writeDfTable(dfTable(read(spark, fpPath)), dfPath, hashBuckets)
-
-  /** Storage-truth document removal for the fingerprint table and
-    * (optionally) its stored df side table, via the shared
-    * [[StoredTables]] recipe:
-    *
-    *  - fingerprints are strictly per-document (the locality that makes
-    *    [[append]] exact), so the table deletes by exact key filter
-    *    ([[StoredTables.deleteByKey]]) — only the removed hashes' `hb`
-    *    buckets rewrite;
-    *  - the df table ([[dfTable]]) is ADDITIVE under append (df counts
-    *    DISTINCT docs per h), so it retracts by exact subtraction
-    *    ([[StoredTables.decrementCounts]]) of the removed docs' own
-    *    distinct-(doc, h) contributions — read from the stored
-    *    fingerprints BEFORE they are rewritten, never from corpus text.
-    *    Hashes decrementing to zero drop, so the serve cap sees exactly
-    *    survivors-only occupancy (q404 hash-proves the served matches).
-    *
-    * Same serving-concurrency contract as [[AnnIndex.deleteStored]]. The
-    * df decrement is NOT idempotent, and the decrementCounts guards can
-    * only catch a re-run that fully retracts a key or over-retracts —
-    * for hashes shared with survivors a second subtraction lands
-    * SILENTLY. A crash between the decrement and the key deletes is
-    * therefore repaired by (1) finishing the key deletes with
-    * `dfPath = None`, then (2) [[rebuildDfTable]] — recompute the df table
-    * from the surviving fingerprints, which is idempotent and index-
-    * bounded; never by re-running the full delete.
-    */
-@deprecated("publish the table through SnapTables and delete via its generation-flip twin — the in-place overwrite invalidates concurrent serves (kept as q404-q411 oracle heritage)", "round 19")
-  def deleteStored(spark: SparkSession, fpPath: String,
-      removedIds: DataFrame, dfPath: Option[String] = None): Unit = {
-    val rm = removedIds.select(col("doc_id"))
-    dfPath.foreach { dp =>
-      val dec = spark.read.parquet(fpPath)
-        .join(rm, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("h")).distinct()
-        .groupBy(col("h")).agg(count(lit(1)).as("__dec"))
-      StoredTables.decrementCounts(spark, dp, "hb", Seq("h"), "df", dec)
-    }
-    StoredTables.deleteByKey(spark, fpPath, "hb", "doc_id", rm)
-  }
 
   /** Match a probe document set against the STORED fingerprint table — the
     * serve path of a repository-scale plagiarism check. Probes are winnowed

@@ -2196,23 +2196,19 @@ object PipelineQueries {
     // through the ACTUAL maintenance stream (≥2 micro-batches, batch_id
     // partitions), COMPACT the delta into the cluster layout (no batch_id
     // residue), REWRITE the %11 right-to-be-forgotten set out of the stored
-    // bytes, and serve top-k scan-only from what remains. Each leg is
-    // individually hash-proved (q394/q400 ingest, q399 compact, q398
-    // delete, q393 serve); what this row adds is their COMPOSITION — the
-    // oracle (base-trained model, survivors-only candidates over the full
-    // corpus) would catch any interaction bug between legs: a compaction
+    // bytes as a snapshot generation flip, and serve top-k scan-only from
+    // the resolved generation. Each leg is individually hash-proved
+    // (q394/q400 ingest, q399 compact, q413 delete, q393 serve); what this
+    // row adds is their COMPOSITION — the oracle (base-trained model,
+    // survivors-only candidates over the full corpus) would catch any
+    // interaction bug between legs: a compaction
     // that resurrects a deleted vector, a delete that drops a streamed one,
     // a batch partition the compact missed. The serve plan keeps the q393
     // production shape (PlanSpec: scan-only + probed-cell DPP).
     QueryDef(
       "q403_ann_lifecycle_e2e",
-      (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val idx = graft.ops.AnnIndex.read(s, lifecycleIndexPath(s, dir))
-        val queries = emb.where(pmod(col("vec_id"), lit(10)) === 0)
-        graft.ops.AnnIndex.search(queries, col("vec_id"), col("embedding"), 3,
-          idx, nprobe = 2)
-      },
+      (s, dir) => SimilarityQueries.snapshotDeleteServe(s, dir,
+        lifecycleIndexPath(s, dir)),
       Some(SimilarityQueries.duckSqrtnServeOracle(
         candFilter = "\n    AND b.vec_id % 11 <> 0", trainOnBase = true))),
 
@@ -2580,24 +2576,26 @@ object PipelineQueries {
     q.awaitTermination()
   }
 
-  /** The q403 stored index: the WHOLE lifecycle composed — a fresh clone of
-    * the frozen 6/7 base model, the 1/7 delta ingested through the actual
+  /** The q403 index: the WHOLE lifecycle composed — a fresh clone of the
+    * frozen 6/7 base model, the 1/7 delta ingested through the actual
     * maintenance stream, the batch_id delta COMPACTED into the cluster
-    * layout, then the %11 removal set REWRITTEN out of storage. Every leg
-    * is individually hash-proved (q394/q400, q399, q398); this path is
+    * layout, then published as a snapshot index with the %11 removal set
+    * rewritten out as a generation flip
+    * ([[SimilarityQueries.publishSnapshotDelete]], the q413 delete). Every
+    * leg is individually hash-proved (q394/q400, q399, q413); this path is
     * their composition, so q403's single hash certifies the interactions.
     */
   private def lifecycleIndexPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     SimilarityQueries.memoPath("lifecycle", dir) { p =>
+      val compacted = graft.Scratch.dir("graft-ann-lifecycle-compacted")
       graft.ops.AnnIndex.write(
-        graft.ops.AnnIndex.read(s, SimilarityQueries.sqrtnBaseIndexPath(s, dir)), p)
+        graft.ops.AnnIndex.read(s, SimilarityQueries.sqrtnBaseIndexPath(s, dir)),
+        compacted)
       val deltaDir = graft.Scratch.dir("graft-ann-lifecycle-delta")
       streamDeltaInto(s, dir, deltaDir)
-      graft.ops.AnnIndex.compact(s, p, deltaDir)
-      val removed = Tables.load(s, dir, "embeddings")
-        .where(pmod(col("vec_id"), lit(11)) === 0)
-        .select(col("vec_id").as("vid"))
-      graft.ops.AnnIndex.deleteStored(s, p, removed)
+      graft.ops.AnnIndex.compact(s, compacted, deltaDir)
+      SimilarityQueries.publishSnapshotDelete(s, dir,
+        graft.ops.AnnIndex.read(s, compacted), p)
     }
 }

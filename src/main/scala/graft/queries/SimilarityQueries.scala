@@ -1879,7 +1879,7 @@ object SimilarityQueries {
     // table (vid, bucket, lo, hi) is strictly per-vector, so the %11
     // removal is a snapshot key-filter on the bb buckets; the frozen
     // one-row thresholds model is NOT snapshotted (it never mutates —
-    // deletion must not retrain, the q398 stance). The full-corpus probe
+    // deletion must not retrain, the q413 stance). The full-corpus probe
     // set serves through the post-flip generation: no removed vector may
     // appear as a neighbor, and every Hamming/rerank decision must equal
     // the oracle funnel whose index side excludes the removal set.
@@ -2502,54 +2502,22 @@ object SimilarityQueries {
            |FROM perr p JOIN sassign s ON s.vec_id = p.vec_id""".stripMargin
       }),
 
-    // STORED delete — q396's semantics made true in the BYTES: q396
-    // anti-joins the in-memory codes frame (the stored parquet still holds
-    // every removed vector's rows — a right-to-be-forgotten deployment
-    // cannot stop there), this leg clones the stored index, REWRITES the
-    // affected cluster partitions via dynamic partition overwrite
-    // (AnnIndex.deleteStored — I/O bounded by the cells holding removals,
-    // never the corpus), and the query serves from a RE-READ of the
-    // rewritten tables alone: scan-only plan, ranks re-closed over the
-    // survivors. Same survivors-only oracle as q396 — identical output
-    // through a storage path that actually forgot. AnnIndexSpec additionally
-    // asserts the removed vids are absent from the re-read parquet itself
-    // and unaffected partitions keep their original files.
-    QueryDef(
-      "q398_ivfpq_stored_delete",
-      (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val idx = graft.ops.AnnIndex.read(s, deletedIndexPath(s, dir))
-        val queries = emb.where(pmod(col("vec_id"), lit(10)) === 0)
-        graft.ops.AnnIndex.search(queries, col("vec_id"), col("embedding"), 3,
-          idx, nprobe = 2)
-      },
-      Some(duckSqrtnServeOracle("\n    AND b.vec_id % 11 <> 0"))),
-
-    // SNAPSHOT-isolated ANN delete — q398's storage rewrite under the
-    // SnapTables manifest layer, carrying the FLAGSHIP family's posting
-    // lists into the serve-during-rewrite guarantee: the delete appends
-    // survivor files for the affected cluster partitions only and
+    // SNAPSHOT-isolated ANN delete — q396's semantics made true in the
+    // BYTES: q396 anti-joins the in-memory codes frame (the stored parquet
+    // still holds every removed vector's rows — a right-to-be-forgotten
+    // deployment cannot stop there). Here the codes table is published
+    // under the SnapTables manifest layer, carrying the FLAGSHIP family's
+    // posting lists into the serve-during-rewrite guarantee: the delete
+    // appends survivor files for the affected cluster partitions only and
     // atomically flips the generation pointer, so a serve resolved before
     // the maintenance window keeps its answer set while this query serves
     // the post-flip generation (SnapTablesSpec pins the isolation; the
     // model tables — centroids/codebooks — are immutable and need no
-    // generations). Same survivors-only oracle as q396/q398: WHERE the
-    // rewrite publishes must be invisible in WHAT serves.
+    // generations). Same survivors-only oracle as q396: WHERE the rewrite
+    // publishes must be invisible in WHAT serves.
     QueryDef(
       "q413_ivfpq_snapshot_delete",
-      (s, dir) => {
-        val p = snapshotIndexPath(s, dir)
-        val idx = graft.ops.IvfPqIndex(
-          centroids = s.read.parquet(s"$p/centroids"),
-          codebooks = s.read.parquet(s"$p/codebooks"),
-          codes = graft.ops.SnapTables.resolve(s, s"$p/codes", "cluster")
-            .select(col("vid"), col("cluster"), col("codes")),
-          dims = 64, m = 8, codewords = 16)
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.where(pmod(col("vec_id"), lit(10)) === 0)
-        graft.ops.AnnIndex.search(queries, col("vec_id"), col("embedding"), 3,
-          idx, nprobe = 2)
-      },
+      (s, dir) => snapshotDeleteServe(s, dir, snapshotIndexPath(s, dir)),
       Some(duckSqrtnServeOracle("\n    AND b.vec_id % 11 <> 0"))),
 
     // SNAPSHOT STREAMED INGEST for the flagship family — the architectural
@@ -2980,40 +2948,52 @@ object SimilarityQueries {
         coarse, dims = 64, m = 8, k = 16, iters = 1)
     }
 
-  /** The q398 stored index: a fresh clone of [[sqrtnIndexPath]]'s tables
-    * (the shared memoized index must stay intact for q393/q396/q397) with
-    * the %11 removal set REWRITTEN OUT of the cloned storage — affected
-    * cluster partitions only, via [[graft.ops.AnnIndex.deleteStored]].
-    */
-  private def deletedIndexPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    memoPath("deleted", dir) { p =>
-      graft.ops.AnnIndex.write(
-        graft.ops.AnnIndex.read(s, sqrtnIndexPath(s, dir)), p)
-      val removed = Tables.load(s, dir, "embeddings")
-        .where(pmod(col("vec_id"), lit(11)) === 0)
-        .select(col("vec_id").as("vid"))
-      graft.ops.AnnIndex.deleteStored(s, p, removed)
-    }
-
-  /** The q413 snapshot index: the q391 model tables copied as-is (immutable
-    * under delete), the codes table PUBLISHED through the [[graft.ops.SnapTables]]
-    * manifest layer, and the %11 removal rewritten as a snapshot-isolated
-    * generation flip instead of an in-place overwrite.
+  /** The q413 snapshot index: the q391 full-corpus index with its %11
+    * removal set rewritten out as a generation flip
+    * ([[publishSnapshotDelete]]).
     */
   private def snapshotIndexPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    memoPath("annsnap", dir) { p =>
-      val idx = graft.ops.AnnIndex.read(s, sqrtnIndexPath(s, dir))
-      idx.centroids.write.mode("overwrite").parquet(s"$p/centroids")
-      idx.codebooks.write.mode("overwrite").parquet(s"$p/codebooks")
-      graft.ops.SnapTables.publishInitial(s, s"$p/codes", "cluster", idx.codes)
-      graft.ops.SnapTables.deleteByKey(s, s"$p/codes", "cluster", "vid",
-        Tables.load(s, dir, "embeddings")
-          .where(pmod(col("vec_id"), lit(11)) === 0)
-          .select(col("vec_id").as("vid")))
-      ()
-    }
+    memoPath("annsnap", dir)(publishSnapshotDelete(s, dir,
+      graft.ops.AnnIndex.read(s, sqrtnIndexPath(s, dir)), _))
+
+  /** Publish `idx` as a snapshot index at `p` — the model tables copied
+    * as-is (immutable under delete), the codes table PUBLISHED through the
+    * [[graft.ops.SnapTables]] manifest layer — then rewrite the %11 removal
+    * set out of the codes as one snapshot-isolated generation flip
+    * (affected cluster partitions only). Shared by the q413 delete leg and
+    * the q403 lifecycle capstone; [[snapshotDeleteServe]] reads it back.
+    */
+  private[queries] def publishSnapshotDelete(
+      s: org.apache.spark.sql.SparkSession, dir: String,
+      idx: graft.ops.IvfPqIndex, p: String): Unit = {
+    idx.centroids.write.mode("overwrite").parquet(s"$p/centroids")
+    idx.codebooks.write.mode("overwrite").parquet(s"$p/codebooks")
+    graft.ops.SnapTables.publishInitial(s, s"$p/codes", "cluster", idx.codes)
+    graft.ops.SnapTables.deleteByKey(s, s"$p/codes", "cluster", "vid",
+      Tables.load(s, dir, "embeddings")
+        .where(pmod(col("vec_id"), lit(11)) === 0)
+        .select(col("vec_id").as("vid")))
+    ()
+  }
+
+  /** The √N-sized top-3 serve (nprobe 2, every 10th vector as a query)
+    * over a [[publishSnapshotDelete]] index: model tables scan-only, codes
+    * from the current generation via [[graft.ops.SnapTables.resolve]].
+    */
+  private[queries] def snapshotDeleteServe(s: org.apache.spark.sql.SparkSession,
+      dir: String, p: String): org.apache.spark.sql.DataFrame = {
+    val idx = graft.ops.IvfPqIndex(
+      centroids = s.read.parquet(s"$p/centroids"),
+      codebooks = s.read.parquet(s"$p/codebooks"),
+      codes = graft.ops.SnapTables.resolve(s, s"$p/codes", "cluster")
+        .select(col("vid"), col("cluster"), col("codes")),
+      dims = 64, m = 8, codewords = 16)
+    val queries = Tables.load(s, dir, "embeddings")
+      .where(pmod(col("vec_id"), lit(10)) === 0)
+    graft.ops.AnnIndex.search(queries, col("vec_id"), col("embedding"), 3,
+      idx, nprobe = 2)
+  }
 
   /** The q420 snapshot index: the FROZEN 6/7-trained model tables cloned
     * as-is, the base codes published as gen 0 of a cluster-partitioned

@@ -2292,55 +2292,14 @@ object TextQueries {
       },
       Some(Text.duckYuleK("documents", "source", "text"))),
 
-    // BM25-index STORED delete — the right-to-be-forgotten path a
-    // view-level filter cannot satisfy: both stored tables (postings by
-    // token hash-bucket, doclens by doc-id bucket) are strictly
-    // per-document, so TextIndex.deleteStored rewrites the %11 removal set
-    // out of the stored bytes by exact key filter (the shared StoredTables
-    // recipe), and this serve reads the REWRITTEN tables alone. Serve-time
-    // corpus statistics (N, total_dl, per-term df) all derive from the
-    // stored tables, so the oracle is the q175/q91 chain over the KEPT
-    // corpus — hash-match proves the post-delete index scores exactly as
-    // one that never indexed the removed docs, statistics included.
-    QueryDef(
-      "q408_bm25_stored_delete",
-      (s, dir) => {
-        val p = bm25DeletedPath(s, dir)
-        val idx = graft.ops.TextIndex.read(s, p)
-        graft.ops.TextIndex.searchBM25(idx, HybridTerms, k = 20)
-      },
-      Some(s"""WITH kept AS (
-           |  SELECT doc_id, text FROM documents WHERE doc_id % 11 <> 0),
-           |${duckBm25Ctes(HybridTerms, "kept")}
-           |SELECT doc_id, score, rank FROM bmranked WHERE rank <= 20""".stripMargin)),
-
-    // LM count-table STORED delete — q278's retraction made true in the
-    // BYTES: the removed docs are counted alone and SUBTRACTED per key
-    // inside the stored parquet (LmIndex.deleteStored via
-    // StoredTables.decrementCounts — affected wb buckets only, zeroed keys
-    // drop, over-retraction and never-trained-text retraction fail loudly
-    // BEFORE mutating). Scoring every document from the re-read tables
-    // must equal a model trained on the filtered split — q278's oracle
-    // verbatim, through a storage path that actually forgot.
-    QueryDef(
-      "q409_lm_stored_delete",
-      (s, dir) => {
-        val p = lmDeletedPath(s, dir)
-        val tbl = graft.ops.LmIndex.read(s, p)
-        val docs = Tables.load(s, dir, "documents")
-        graft.ops.LmIndex.score(tbl, docs, col("doc_id"), col("text"))
-      },
-      Some(s"""WITH ${duckLmScoreCtes(" AND doc_id % 11 <> 0")}
-           |SELECT doc_id, n_bigrams, nll, backoff_frac FROM lmscores""".stripMargin)),
-
-    // BM25 index on the SNAPSHOT layer (round 18 — q408's in-place rewrite
-    // carried the serve-during-rewrite caveat SnapTables removes): postings
-    // (tb buckets) and doclens (db buckets) both ride the generation layer;
-    // the %11 removal deletes by snapshot key-filter in each, and the serve
-    // reads the post-flip generations — corpus statistics (N, total_dl,
-    // per-term df) derive from the resolved tables, so the post-delete
-    // index scores exactly as one that never indexed the removed docs.
-    // Oracle: q408's survivors chain verbatim.
+    // BM25 index on the SNAPSHOT layer — the right-to-be-forgotten path a
+    // view-level filter cannot satisfy: postings (tb buckets) and doclens
+    // (db buckets) are strictly per-document and both ride the generation
+    // layer; the %11 removal deletes by snapshot key-filter in each, and
+    // the serve reads the post-flip generations — corpus statistics (N,
+    // total_dl, per-term df) derive from the resolved tables, so the
+    // post-delete index scores exactly as one that never indexed the
+    // removed docs. Oracle: the q175/q91 chain over the KEPT corpus.
     QueryDef(
       "q425_bm25_snapshot_delete",
       (s, dir) => graft.ops.TextIndex.searchBM25(
@@ -2362,12 +2321,13 @@ object TextQueries {
       Some(s"""WITH ${duckBm25Ctes(HybridTerms)}
            |SELECT doc_id, score, rank FROM bmranked WHERE rank <= 20""".stripMargin)),
 
-    // LM count tables on the snapshot layer: the %11 retraction subtracts
-    // the removed docs' own uni/bigram counts inside their wb buckets via
-    // SnapTables.decrementCounts (same pre-aggregation/unknown-key/
-    // over-retraction guards as the in-place q409, published as
-    // generations) — scoring from the post-flip tables equals a model
-    // trained on the filtered split. Oracle: q409's verbatim.
+    // LM count tables on the snapshot layer — q278's retraction made true
+    // in the BYTES: the %11 retraction subtracts the removed docs' own
+    // uni/bigram counts inside their wb buckets (LmIndex.deleteSnapshot via
+    // SnapTables.decrementCounts — zeroed keys drop, over-retraction and
+    // never-trained-text retraction fail loudly BEFORE publishing) —
+    // scoring from the post-flip tables equals a model trained on the
+    // filtered split. Oracle: q278's verbatim.
     QueryDef(
       "q427_lm_snapshot_delete",
       (s, dir) => {
@@ -2424,33 +2384,16 @@ object TextQueries {
   )
 
   // ---------------------------------------------------------------------
-  // Snapshot-layer migrations for the BM25 / LM / CMS families
-  // (q425–q430): memoized setups, SnapTables generations replacing the
-  // in-place overwrite.
+  // Snapshot-layer setups for the BM25 / LM / CMS families (q425–q430):
+  // build once per (tag, sfdir) into a scratch path, publish through
+  // SnapTables, serve scan-only afterwards (the SimilarityQueries.memoPath
+  // discipline).
   // ---------------------------------------------------------------------
 
   private val TokB = graft.ops.TextIndex.DefaultTokenBuckets
 
   private def bm25Tb = pmod(Hashing.hash60(col("tok")), lit(TokB.toLong)).cast("int")
   private def bm25Db = pmod(col("doc_id"), lit(TokB.toLong)).cast("int")
-
-  /** The full-corpus BM25 index frames the q408 stored leg and the q425
-    * snapshot leg both publish — one shared materialized build (the
-    * memoFrame discipline: both tables to scratch parquet once, every leg
-    * reads them back scan-only instead of re-tokenizing the corpus).
-    */
-  private def bm25MasterFull(s: org.apache.spark.sql.SparkSession,
-      dir: String): graft.ops.Bm25Index = {
-    val p = SimilarityQueries.memoPath("bm25master", dir) { mp =>
-      val idx = graft.ops.TextIndex.build(Tables.load(s, dir, "documents"),
-        col("doc_id"), col("text"))
-      idx.postings.write.mode("overwrite").parquet(s"$mp/postings")
-      idx.doclens.write.mode("overwrite").parquet(s"$mp/doclens")
-    }
-    graft.ops.Bm25Index(
-      postings = s.read.parquet(s"$p/postings"),
-      doclens = s.read.parquet(s"$p/doclens"))
-  }
 
   private def publishBm25Snap(s: org.apache.spark.sql.SparkSession,
       p: String, idx: graft.ops.Bm25Index): Unit = {
@@ -2472,8 +2415,8 @@ object TextQueries {
       dir: String): String =
     SimilarityQueries.memoPath("bm25snapdel", dir) { p =>
       val docs = Tables.load(s, dir, "documents")
-      // shared master build with the q408 stored leg
-      publishBm25Snap(s, p, bm25MasterFull(s, dir))
+      publishBm25Snap(s, p,
+        graft.ops.TextIndex.build(docs, col("doc_id"), col("text")))
       val removed = docs.where(pmod(col("doc_id"), lit(11)) === 0)
         .select(col("doc_id"))
       graft.ops.SnapTables.deleteByKey(s, s"$p/postings", "tb", "doc_id", removed)
@@ -2507,23 +2450,6 @@ object TextQueries {
     Tables.load(s, dir, "documents").where(pmod(Hashing.hash60(
       concat(lit("lm-"), col("doc_id").cast("string"))), lit(2L)) === 0)
 
-  /** The LM count tables trained on the shared half-split — the q409
-    * stored leg and the q427 snapshot leg both publish these exact frames;
-    * one shared materialized build (the memoFrame discipline).
-    */
-  private def lmMasterFull(s: org.apache.spark.sql.SparkSession,
-      dir: String): graft.ops.LmIndex.LmTables = {
-    val p = SimilarityQueries.memoPath("lmmaster", dir) { mp =>
-      val tbl = graft.ops.LmIndex.build(lmTrain(s, dir),
-        col("doc_id"), col("text"))
-      tbl.uni.write.mode("overwrite").parquet(s"$mp/uni")
-      tbl.big.write.mode("overwrite").parquet(s"$mp/big")
-    }
-    graft.ops.LmIndex.LmTables(
-      uni = s.read.parquet(s"$p/uni"),
-      big = s.read.parquet(s"$p/big"))
-  }
-
   private def publishLmSnap(s: org.apache.spark.sql.SparkSession,
       p: String, tbl: graft.ops.LmIndex.LmTables): Unit = {
     graft.ops.SnapTables.publishInitial(s, s"$p/uni", "wb",
@@ -2544,15 +2470,11 @@ object TextQueries {
       dir: String): String =
     SimilarityQueries.memoPath("lmsnapdel", dir) { p =>
       val train = lmTrain(s, dir)
-      // shared master build with the q409 stored leg
-      publishLmSnap(s, p, lmMasterFull(s, dir))
-      val d = graft.ops.LmIndex.build(
+      publishLmSnap(s, p,
+        graft.ops.LmIndex.build(train, col("doc_id"), col("text")))
+      graft.ops.LmIndex.deleteSnapshot(s, p,
         train.where(pmod(col("doc_id"), lit(11)) === 0),
         col("doc_id"), col("text"))
-      graft.ops.SnapTables.decrementCounts(s, s"$p/uni", "wb", Seq("w"), "c1",
-        d.uni.withColumnRenamed("c1", "__dec"))
-      graft.ops.SnapTables.decrementCounts(s, s"$p/big", "wb",
-        Seq("w1", "w2"), "c2", d.big.withColumnRenamed("c2", "__dec"))
       ()
     }
 
@@ -2624,34 +2546,6 @@ object TextQueries {
         coalesce(col("exact"), lit(0L)).as("exact"),
         (col("est") >= coalesce(col("exact"), lit(0L))).as("no_undercount"))
   }
-
-  // ---------------------------------------------------------------------
-  // Memoized stored-index setups for the storage-truth delete legs
-  // (q408/q409): build the full index ONCE per (tag, sfdir) into a scratch
-  // path, rewrite the %11 removal set out of the stored bytes, serve
-  // scan-only afterwards (the SimilarityQueries.memoPath discipline).
-  // ---------------------------------------------------------------------
-
-  private def bm25DeletedPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    SimilarityQueries.memoPath("bm25del", dir) { p =>
-      val docs = Tables.load(s, dir, "documents")
-      // shared master build with the q425 snapshot leg
-      graft.ops.TextIndex.write(bm25MasterFull(s, dir), p)
-      graft.ops.TextIndex.deleteStored(s, p,
-        docs.where(pmod(col("doc_id"), lit(11)) === 0).select(col("doc_id")))
-    }
-
-  private def lmDeletedPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    SimilarityQueries.memoPath("lmdel", dir) { p =>
-      val train = lmTrain(s, dir)
-      // shared master build with the q427 snapshot leg
-      graft.ops.LmIndex.write(lmMasterFull(s, dir), p)
-      val removed = train.where(pmod(col("doc_id"), lit(11)) === 0)
-      graft.ops.LmIndex.deleteStored(s, p, removed,
-        col("doc_id"), col("text"))
-    }
 
   // -------------------------------------------------------------------------
   // CJK planted fixtures (q159/q160): palette-built deterministic texts —

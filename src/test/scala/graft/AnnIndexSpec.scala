@@ -92,7 +92,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
 
   /** Per-cluster partition directories and their (non-marker) file names
     * under a stored codes table — the storage-truth witness the
-    * deleteStored/compact specs assert against.
+    * compact specs assert against.
     */
   private def clusterFiles(codesDir: String): Map[String, Set[String]] = {
     import scala.jdk.CollectionConverters._
@@ -107,57 +107,6 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
         java.nio.file.Files.isDirectory(root.resolve(n)))
       .map(n => n -> listNames(root.resolve(n)).filterNot(_.startsWith("_")).toSet)
       .toMap
-  }
-
-  test("deleteStored: removed vids are gone from the stored BYTES; unaffected partitions keep their original files") {
-    val idx = buildOn(emb)
-    val dir = tmpDir("ann-del-stored")
-    AnnIndex.write(idx, dir)
-    val removed = emb.where(pmod(col("vec_id"), lit(11)) === 0)
-      .select(col("vec_id").as("vid"))
-    val removedIds = removed.collect().map(_.getLong(0)).toSet
-    assert(removedIds.nonEmpty)
-    val affected = spark.read.parquet(s"$dir/codes")
-      .join(removed, Seq("vid"), "left_semi")
-      .select(col("cluster")).distinct().collect().map(_.getInt(0)).toSet
-    val before = clusterFiles(s"$dir/codes")
-    AnnIndex.deleteStored(spark, dir, removed)
-    val after = clusterFiles(s"$dir/codes")
-    // the deletion is true in storage: a raw re-read of the parquet holds
-    // no removed vid (this is what q396's view-filter delete cannot claim)
-    val reread = spark.read.parquet(s"$dir/codes")
-    assert(reread.join(removed, Seq("vid"), "left_semi").isEmpty,
-      "removed vids must be absent from the re-read stored parquet itself")
-    // survivors byte-identical to the original posting lists minus removals
-    assert(codeRows(reread.select(col("vid"), col("cluster"), col("codes"))) ==
-      codeRows(idx.codes).filterNot { case (vid, _) => removedIds.contains(vid) })
-    // the rewrite touched ONLY the affected cells — every unaffected
-    // partition keeps its original files (the bounded-I/O claim at scale)
-    for ((d, fs) <- before if !affected.contains(d.stripPrefix("cluster=").toInt))
-      assert(after.get(d).contains(fs),
-        s"unaffected partition $d must keep its original files")
-    // re-read serve == the in-memory delete's serve (q396's semantics)
-    val queries = emb.where(pmod(col("vec_id"), lit(10)) === 0)
-    assert(searchRows(AnnIndex.read(spark, dir), queries) ==
-      searchRows(AnnIndex.delete(idx, removed), queries))
-  }
-
-  test("deleteStored: a fully-emptied cell's directory is dropped (dynamic overwrite alone would keep it stale)") {
-    val idx = buildOn(emb)
-    val dir = tmpDir("ann-del-empty")
-    AnnIndex.write(idx, dir)
-    // remove EVERY vector of one cell: the survivors write emits no rows for
-    // it, so only the explicit directory drop keeps storage truthful
-    val victim = idx.codes.select(col("cluster")).orderBy(col("cluster")).head().getInt(0)
-    val removed = idx.codes.where(col("cluster") === victim).select(col("vid"))
-    val nRemoved = removed.count()
-    AnnIndex.deleteStored(spark, dir, removed)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/codes/cluster=$victim")),
-      "the emptied cell's partition directory must be gone")
-    val reread = spark.read.parquet(s"$dir/codes")
-    assert(reread.where(col("cluster") === victim).isEmpty)
-    assert(reread.count() == idx.codes.count() - nRemoved)
   }
 
   test("compact: batch_id delta folds into the cluster layout — no residue, delta consumed, serve unchanged") {
@@ -221,18 +170,6 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     assert(mine.head.getAs[Int]("cluster") == newCluster,
       "the surviving row must be the delta's (new cell), not the stale one")
     assert(re.count() == idx.codes.count(), "total rows unchanged by a move")
-  }
-
-  test("deleteStored: a removal covering the whole index fails fast, storage untouched") {
-    val idx = buildOn(emb)
-    val dir = tmpDir("ann-del-all")
-    AnnIndex.write(idx, dir)
-    val all = idx.codes.select(col("vid"))
-    intercept[IllegalArgumentException] {
-      AnnIndex.deleteStored(spark, dir, all)
-    }
-    // the refusal happened BEFORE any mutation: the table still reads whole
-    assert(AnnIndex.read(spark, dir).codes.count() == idx.codes.count())
   }
 
   test("compact: upsert — a replayed delta cannot duplicate posting rows") {

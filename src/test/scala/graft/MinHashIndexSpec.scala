@@ -106,6 +106,15 @@ class MinHashIndexSpec extends AnyFunSuite with SparkSpec {
       df.select(col("band").cast("long"), col("band_sig"), col("df"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(rows(merged) == rows(full), "bucket sizes must merge additively")
+    // the repair verb: a stale stored side table (the base's alone, as after
+    // a crash between the band and df writes) rebuilds from the stored bands
+    // to the full recompute
+    val dir = tmpDir("minhash-rebuild-df")
+    MinHashIndex.write(sigs, dir, rowsPerBand = 4)
+    MinHashIndex.writeBucketDf(MinHashIndex.bandTable(baseSigs, 4), dir)
+    MinHashIndex.rebuildBucketDf(spark, dir)
+    assert(rows(MinHashIndex.readBucketDf(spark, dir)) == rows(full),
+      "rebuilt bucket-df must equal the full recompute")
     val statsServe = MinHashIndex.matches(bands, sigs, probesOf(docs),
         col("doc_id"), col("text"), n = 3, numHashes = 16, rowsPerBand = 4,
         minEstimate = 0.75, maxBucket = Some(100), storedBucketDf = Some(merged))
@@ -147,44 +156,5 @@ class MinHashIndexSpec extends AnyFunSuite with SparkSpec {
         s"serve plan must not contain '$tok':\n$plan"))
     val scans = "Scan parquet".r.findAllIn(plan).size
     assert(scans >= 2, s"both stored tables must be read as parquet, got $scans scans:\n$plan")
-  }
-
-  test("deleteStored: sigs, bands AND bucket-df bytes equal a survivors-only recompute; re-run is a no-op") {
-    val sigs = MinHashIndex.build(docs, col("doc_id"), col("text"), 3, 16)
-    val dir = tmpDir("minhash-del")
-    MinHashIndex.write(sigs, dir, rowsPerBand = 4)
-    MinHashIndex.writeBucketDf(MinHashIndex.bandTable(sigs, 4), dir)
-    val removed = docs.where(pmod(col("doc_id"), lit(11)) === 0)
-      .select(col("doc_id"))
-    MinHashIndex.deleteStored(spark, dir, removed)
-    val survivors = docs.where(pmod(col("doc_id"), lit(11)) =!= 0)
-    val sigsSurv = Dedup.minhashSignatures(survivors, col("doc_id"), col("text"), 3, 16)
-    val bandsSurv = MinHashIndex.bandTable(sigsSurv, 4)
-    def bandRows(t: DataFrame): Set[(Long, Long, Long)] =
-      t.select(col("doc_id").cast("long"), col("band").cast("long"), col("band_sig"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    def dfRows(t: DataFrame): Set[(Long, Long, Long)] =
-      t.select(col("band").cast("long"), col("band_sig"), col("df").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(sigRows(MinHashIndex.readSigs(spark, dir)) == sigRows(sigsSurv),
-      "stored signatures after delete must equal the never-saw-them rebuild")
-    assert(bandRows(MinHashIndex.readBands(spark, dir)) == bandRows(bandsSurv),
-      "stored bands after delete must equal the never-saw-them rebuild")
-    assert(dfRows(MinHashIndex.readBucketDf(spark, dir))
-        == dfRows(MinHashIndex.bucketDfTable(bandsSurv)),
-      "decremented bucket-df must equal the survivors-only recompute")
-    // the documented crash-recovery finishing path: re-running the key
-    // deletes alone (maintainBucketDf = false) on already-deleted keys is a
-    // clean no-op — nothing left to rewrite, storage unchanged
-    MinHashIndex.deleteStored(spark, dir, removed, maintainBucketDf = false)
-    assert(sigRows(MinHashIndex.readSigs(spark, dir)) == sigRows(sigsSurv))
-    assert(dfRows(MinHashIndex.readBucketDf(spark, dir))
-        == dfRows(MinHashIndex.bucketDfTable(bandsSurv)))
-    // the crash-recovery verb: a doubted df table rebuilds from the stored
-    // bands — idempotent, equal to the survivors recompute either way
-    MinHashIndex.rebuildBucketDf(spark, dir)
-    assert(dfRows(MinHashIndex.readBucketDf(spark, dir))
-        == dfRows(MinHashIndex.bucketDfTable(bandsSurv)),
-      "rebuilt bucket-df must equal the survivors-only recompute")
   }
 }

@@ -76,64 +76,43 @@ class ParaIndexSpec extends AnyFunSuite with SparkSpec {
       s"table side must be scan-only; found $splits split() calls:\n$plan")
   }
 
-  test("deleteStored: re-election == survivors rebuild row for row; survivor-less hashes drop") {
+  test("deleteSnapshot: re-election publishes as a generation; a pre-flip scrubber keeps the old winners") {
     import spark.implicits._
-    val dir = tmpDir("para-del")
-    ParaIndex.write(ParaIndex.build(corpus, col("id"), col("text")), dir)
+    import graft.ops.SnapTables
+    def published(prefix: String): String = {
+      val d = tmpDir(prefix)
+      SnapTables.publishInitial(spark, d, "hb",
+        ParaIndex.build(corpus, col("id"), col("text"))
+          .withColumn("hb", pmod(col("h"),
+            lit(ParaIndex.DefaultHashBuckets.toLong)).cast("int")))
+      d
+    }
+    val dir = published("para-snap-del")
+    // a scrubber resolved BEFORE the delete — its electorate is gen 0
+    val preFlip = SnapTables.resolve(spark, dir, "hb")
     // remove docs 1 and 3: doc 1 WON "alpha one" (doc 4 still carries it)
     // and "shared footer" (doc 2 still carries it) — both must re-elect;
     // doc 3's "gamma three" has no surviving carrier — its hash must drop
     val removed = Seq(1L, 3L).toDF("doc_id")
     val survivors = corpus.where(!col("id").isin(1L, 3L))
-    ParaIndex.deleteStored(spark, dir, removed, survivors, col("id"), col("text"))
-    val stored = ParaIndex.read(spark, dir)
-    assert(stored.where(col("doc_id").isin(1L, 3L)).count() == 0L,
-      "removed winners must leave the stored bytes")
-    assert(rows(stored)
-        == rows(ParaIndex.firstOccurrences(survivors, col("id"), col("text"))),
-      "re-elected table must equal a from-scratch election over the survivors")
-    // the re-elections landed where the fixture predicts
+    val gen = ParaIndex.deleteSnapshot(spark, dir, removed, survivors,
+      col("id"), col("text"))
+    assert(gen == 1)
+    // post-flip: equals the from-scratch survivors election row for row
+    val expected = rows(ParaIndex.firstOccurrences(survivors, col("id"), col("text")))
+    val stored = SnapTables.resolve(spark, dir, "hb")
+    assert(rows(stored) == expected)
     val byDoc = stored.select(col("doc_id").cast("long"), col("pos"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(byDoc.contains((4L, 0L)), "'alpha one' must re-elect to doc 4")
     assert(byDoc.contains((2L, 1L)), "'shared footer' must re-elect to doc 2 pos 1")
-  }
-
-  test("deleteStored: a survivors frame that still contains the removed docs cannot re-elect them") {
-    import spark.implicits._
-    val dir = tmpDir("para-del-guard")
-    ParaIndex.write(ParaIndex.build(corpus, col("id"), col("text")), dir)
-    val removed = Seq(1L, 3L).toDF("doc_id")
-    // the natural caller slip: passing the FULL corpus as survivors — a
-    // removed doc would win back its own orphaned hashes (doc 1 is the
-    // minimal occurrence of 'alpha one'), resurrecting the purged rows
-    ParaIndex.deleteStored(spark, dir, removed, corpus, col("id"), col("text"))
-    val stored = ParaIndex.read(spark, dir)
-    assert(stored.where(col("doc_id").isin(1L, 3L)).count() == 0L,
+    // the natural caller slip — passing the FULL corpus as survivors — must
+    // not let a removed doc win back its own orphaned hashes (doc 1 is the
+    // minimal occurrence of 'alpha one')
+    val slip = published("para-snap-del-slip")
+    ParaIndex.deleteSnapshot(spark, slip, removed, corpus, col("id"), col("text"))
+    assert(rows(SnapTables.resolve(spark, slip, "hb")) == expected,
       "removed docs must be excluded from re-election candidacy outright")
-    assert(rows(stored) == rows(ParaIndex.firstOccurrences(
-        corpus.where(!col("id").isin(1L, 3L)), col("id"), col("text"))),
-      "the result must equal the correct survivors rebuild despite the caller slip")
-  }
-
-  test("deleteSnapshot: re-election publishes as a generation; a pre-flip scrubber keeps the old winners") {
-    import spark.implicits._
-    import graft.ops.SnapTables
-    val dir = tmpDir("para-snap-del")
-    SnapTables.publishInitial(spark, dir, "hb",
-      ParaIndex.build(corpus, col("id"), col("text"))
-        .withColumn("hb", pmod(col("h"),
-          lit(ParaIndex.DefaultHashBuckets.toLong)).cast("int")))
-    // a scrubber resolved BEFORE the delete — its electorate is gen 0
-    val preFlip = SnapTables.resolve(spark, dir, "hb")
-    val removed = Seq(1L, 3L).toDF("doc_id")
-    val survivors = corpus.where(!col("id").isin(1L, 3L))
-    val gen = ParaIndex.deleteSnapshot(spark, dir, removed, survivors,
-      col("id"), col("text"))
-    assert(gen == 1)
-    // post-flip: equals the from-scratch survivors election, like deleteStored
-    assert(rows(SnapTables.resolve(spark, dir, "hb"))
-        == rows(ParaIndex.firstOccurrences(survivors, col("id"), col("text"))))
     // the isolation is SEMANTICALLY visible on an elected table: the
     // pre-flip electorate still cuts doc 3's now-dropped paragraph
     val probe = Seq((100L, "gamma three\nbrand new line")).toDF("id", "text")

@@ -244,14 +244,14 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       s"the codes scan must be partition-pruned by the probed clusters:\n$p")
   }
 
-  test("q398/q399 stored-lifecycle serves: scan-only plans with probed-cell partition pruning") {
-    // q398 serves a storage-rewritten (deleteStored) clone; q399 serves the
-    // compacted base+delta table. Both must keep the q393 production shape:
-    // parquet scans + ADC chain, zero training/encode lineage, and DPP on
-    // the cluster-partitioned codes — the compaction query exists precisely
-    // to RESTORE that pruning (a batch_id-partitioned delta side has none).
-    for (q <- Seq("q398_ivfpq_stored_delete", "q399_ivfpq_compacted_serve",
-        "q403_ann_lifecycle_e2e",
+  test("q399/q403 stored-lifecycle serves: scan-only plans with probed-cell partition pruning") {
+    // q399 serves the compacted base+delta table; q403 serves the compacted
+    // lifecycle index after its snapshot delete. Both must keep the q393
+    // production shape: parquet scans + ADC chain, zero training/encode
+    // lineage, and DPP on the cluster-partitioned codes — the compaction
+    // query exists precisely to RESTORE that pruning (a batch_id-partitioned
+    // delta side has none).
+    for (q <- Seq("q399_ivfpq_compacted_serve", "q403_ann_lifecycle_e2e",
         // the snapshot-published codes table (explicit manifest file list +
         // basePath) must keep the SAME production shape — generations are a
         // publication mechanism, not a plan change

@@ -90,24 +90,4 @@ class SimHashIndexSpec extends AnyFunSuite with SparkSpec {
     val scans = "Scan parquet".r.findAllIn(plan).size
     assert(scans >= 2, s"stored keys + probe docs must both scan parquet, got $scans:\n$plan")
   }
-
-  test("deleteStored: removed docs' key rows leave the stored bytes; serve == never-indexed rebuild") {
-    val dir = tmpDir("simhash-del")
-    SimHashIndex.write(SimHashIndex.build(docs, col("doc_id"), col("text")),
-      dir, maxHamming = 3, numBlocks = 6)
-    val removedIds = docs.where(pmod(col("doc_id"), lit(11)) === 0)
-      .select(col("doc_id"))
-    SimHashIndex.deleteStored(spark, dir, removedIds)
-    val stored = SimHashIndex.readKeys(spark, dir)
-    // byte-level: no removed doc's pigeonhole rows remain anywhere
-    assert(stored.join(removedIds, Seq("doc_id"), "left_semi").count() == 0L,
-      "removed docs must leave the stored key bytes")
-    // serve-level: match set equals an index built on the survivors alone
-    val survivors = docs.where(pmod(col("doc_id"), lit(11)) =!= 0)
-    val rebuilt = SimHashIndex.keyTable(
-      SimHashIndex.build(survivors, col("doc_id"), col("text")),
-      maxHamming = 3, numBlocks = 6)
-    assert(serveRows(stored) == serveRows(rebuilt),
-      "post-delete serve must be indistinguishable from never having indexed them")
-  }
 }

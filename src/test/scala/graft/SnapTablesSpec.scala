@@ -7,10 +7,10 @@ import graft.ops.SnapTables
 
 /** The snapshot-manifest storage layer: generation flip is atomic and
   * PUBLICATION-ordered (a reader resolved before a rewrite keeps serving
-  * its generation after the flip — the serve-during-rewrite guarantee the
-  * in-place rewrites only document), crashed writers' orphan files are
-  * invisible (manifest-driven reads never trust directory listings), and
-  * expiry reclaims exactly the unreferenced files.
+  * its generation after the flip — the serve-during-rewrite guarantee),
+  * the delete plans' guards refuse bad batches before publishing, crashed
+  * writers' orphan files are invisible (manifest-driven reads never trust
+  * directory listings), and expiry reclaims exactly the unreferenced files.
   */
 class SnapTablesSpec extends AnyFunSuite with SparkSpec {
 
@@ -52,6 +52,16 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     // time travel reaches both while both are retained
     assert(rows(SnapTables.resolveAt(spark, dir, "pb", 0)) == allRows)
     assert(rows(SnapTables.resolveAt(spark, dir, "pb", 1)) == survRows)
+    // a delete that empties partition 0 (its survivors 3, 6, 9) drops it
+    // from the manifest; the unaffected partitions keep their exact files
+    assert(SnapTables.deleteByKey(spark, dir, "pb", "key",
+      Seq(3L, 6L, 9L).toDF("key")) == 2)
+    val m1 = SnapTables.manifestEntries(spark, dir, 1)
+    val m2 = SnapTables.manifestEntries(spark, dir, 2)
+    assert(!m2.contains(0), "an emptied partition must leave the manifest")
+    assert(m2 == m1 - 0, "unaffected partitions must keep their original files")
+    assert(rows(SnapTables.resolve(spark, dir, "pb")) ==
+      survRows.filterNot { case (k, _) => k % 3 == 0 })
   }
 
   test("a crashed writer's orphan files are invisible: readers trust manifests, not listings") {
@@ -104,14 +114,19 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     val counts = (1L to 12L).map(k => (k, 10L, (k % 3).toInt)).toDF("key", "n", "pb")
     SnapTables.publishInitial(spark, dir, "pb", counts)
     val inFlight = SnapTables.resolve(spark, dir, "pb")
-    // retract 4 from keys 1..3, all 10 from key 4 (legitimate full retraction)
-    val deltas = Seq((1L, 4L), (2L, 4L), (3L, 4L), (4L, 10L)).toDF("key", "__dec")
+    // retract 4 from keys 1..3, all 10 from key 4 (legitimate full
+    // retraction); key 3's retraction arrives as two rows (1 + 3), which
+    // must subtract their sum ONCE instead of fanning out the join
+    val deltas = Seq((1L, 4L), (2L, 4L), (3L, 1L), (3L, 3L), (4L, 10L))
+      .toDF("key", "__dec")
     val gen = SnapTables.decrementCounts(spark, dir, "pb", Seq("key"), "n", deltas)
     assert(gen == 1)
     def counted(df: DataFrame): Map[Long, Long] =
       df.select(col("key"), col("n")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val now = counted(SnapTables.resolve(spark, dir, "pb"))
+    assert(SnapTables.resolve(spark, dir, "pb").count() == 11L,
+      "duplicate delta keys must not duplicate stored rows")
     assert(now(1L) == 6L && now(2L) == 6L && now(3L) == 6L)
     assert(!now.contains(4L), "a key retracted to zero must drop")
     assert((5L to 12L).forall(k => now(k) == 10L))
@@ -133,6 +148,43 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     assert(unk.getMessage.contains("never counted"))
     assert(SnapTables.currentGeneration(spark, dir).contains(1),
       "refused batches must not advance the generation")
+  }
+
+  test("LmIndex.repairBig completes a snapshot delete that crashed between the uni and big flips") {
+    import spark.implicits._
+    import graft.ops.LmIndex
+    val dir = tmpDir("snap-lmrepair")
+    val docs = Seq(
+      (1L, "the cat sat on the mat"),
+      (2L, "the dog sat on the rug"),
+      (3L, "a bird flew over the rug")).toDF("id", "body")
+    val tbl = LmIndex.build(docs, col("id"), col("body"))
+    def wb(w: String) = pmod(hash(col(w)), lit(4))
+    SnapTables.publishInitial(spark, s"$dir/uni", "wb", tbl.uni.withColumn("wb", wb("w")))
+    SnapTables.publishInitial(spark, s"$dir/big", "wb", tbl.big.withColumn("wb", wb("w1")))
+    val removed = docs.where(col("id") === 2L)
+    // simulate the crash: deleteSnapshot's FIRST flip (the uni decrement)
+    // landed, the process died before the big flip
+    SnapTables.decrementCounts(spark, s"$dir/uni", "wb", Seq("w"), "c1",
+      LmIndex.build(removed, col("id"), col("body")).uni
+        .withColumnRenamed("c1", "__dec"))
+    // the documented one-call repair publishes the big half alone
+    assert(LmIndex.repairBig(spark, dir, removed, col("id"), col("body")) == 1)
+    // both tables now equal a from-scratch build on the survivors
+    val expect = LmIndex.build(docs.where(col("id") =!= 2L), col("id"), col("body"))
+    def uniSet(u: DataFrame) = u.select(col("w"), col("c1")).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    def bigSet(b: DataFrame) = b.select(col("w1"), col("w2"), col("c2")).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    assert(uniSet(SnapTables.resolve(spark, s"$dir/uni", "wb")) == uniSet(expect.uni))
+    assert(bigSet(SnapTables.resolve(spark, s"$dir/big", "wb")) == bigSet(expect.big))
+    // a doubted second repair is refused, never double-subtracted: the
+    // removed doc's own bigrams ("the dog") were fully retracted
+    val again = intercept[IllegalArgumentException] {
+      LmIndex.repairBig(spark, dir, removed, col("id"), col("body"))
+    }
+    assert(again.getMessage.contains("never counted"))
+    assert(SnapTables.currentGeneration(spark, s"$dir/big").contains(1))
   }
 
   test("a crash between manifest write and pointer flip is repaired by re-running the publish") {

@@ -137,24 +137,4 @@ class TextIndexSpec extends AnyFunSuite with SparkSpec {
     assert(!plan.contains("split("),
       s"corpus tokenization leaked into the batched hybrid serve plan:\n$plan")
   }
-
-  test("deleteStored: removed docs leave BOTH stored tables' bytes; serve == never-indexed rebuild") {
-    val dir = tmpDir("bm25-del")
-    TextIndex.write(TextIndex.build(docs, col("doc_id"), col("text")), dir)
-    val removedIds = docs.where(pmod(col("doc_id"), lit(11)) === 0)
-      .select(col("doc_id"))
-    TextIndex.deleteStored(spark, dir, removedIds)
-    // byte-level: neither stored table retains a removed doc's rows
-    for (tbl <- Seq("postings", "doclens"))
-      assert(spark.read.parquet(s"$dir/$tbl")
-          .join(removedIds, Seq("doc_id"), "left_semi").count() == 0L,
-        s"removed docs must leave the stored $tbl bytes")
-    // serve-level: scores (N, avgdl, df all derive from the stored tables)
-    // equal an index that never saw the removed docs
-    val survivors = docs.where(pmod(col("doc_id"), lit(11)) =!= 0)
-    assert(ranked(TextIndex.searchBM25(TextIndex.read(spark, dir), terms, k = 10))
-        == ranked(TextIndex.searchBM25(
-          TextIndex.build(survivors, col("doc_id"), col("text")), terms, k = 10)),
-      "post-delete serve must be indistinguishable from never having indexed them")
-  }
 }

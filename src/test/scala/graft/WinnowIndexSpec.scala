@@ -85,47 +85,19 @@ class WinnowIndexSpec extends AnyFunSuite with SparkSpec {
     assert(scans >= 2, s"table-side consumers must read stored parquet, got $scans scans:\n$plan")
   }
 
-  test("deleteStored: fingerprint bytes AND the stored df table equal a survivors-only recompute") {
-    val fp = WinnowIndex.build(docs, col("doc_id"), col("text"), k = 3, w = 4)
-    val fpDir = tmpDir("winnow-del-fp")
-    val dfDir = tmpDir("winnow-del-df")
-    WinnowIndex.write(fp, fpDir)
-    WinnowIndex.writeDfTable(WinnowIndex.dfTable(fp), dfDir)
-    val removed = docs.where(pmod(col("doc_id"), lit(11)) === 0)
-      .select(col("doc_id"))
-    WinnowIndex.deleteStored(spark, fpDir, removed, dfPath = Some(dfDir))
-    val survivors = docs.where(pmod(col("doc_id"), lit(11)) =!= 0)
-    val fpSurv = Dedup.winnowFingerprints(survivors, col("doc_id"), col("text"),
-      k = 3, w = 4)
-    // fingerprint table: the re-read BYTES are exactly the survivors' rows
-    assert(fpRows(WinnowIndex.read(spark, fpDir)) == fpRows(fpSurv),
-      "stored fingerprints after delete must equal the never-saw-them rebuild")
-    // df side table: the exact decrement equals a from-scratch recompute,
-    // with zero-reaching hashes DROPPED (not kept at 0)
-    def dfRows(t: DataFrame): Set[(Long, Long)] =
-      t.select(col("h"), col("df").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(dfRows(WinnowIndex.readDfTable(spark, dfDir))
-        == dfRows(WinnowIndex.dfTable(fpSurv)),
-      "decremented df table must equal the survivors-only recompute")
-  }
-
   test("rebuildDfTable: the crash-recovery verb recomputes the df bytes from the stored fingerprints") {
     val fp = WinnowIndex.build(docs, col("doc_id"), col("text"), k = 3, w = 4)
-    val fpDir = tmpDir("winnow-rec-fp")
-    val dfDir = tmpDir("winnow-rec-df")
-    WinnowIndex.write(fp, fpDir)
-    WinnowIndex.writeDfTable(WinnowIndex.dfTable(fp), dfDir)
-    val removed = docs.where(pmod(col("doc_id"), lit(11)) === 0)
-      .select(col("doc_id"))
-    // the documented crash repair: the df decrement's fate is UNKNOWN (here:
-    // it never ran), so finish the idempotent key deletes WITHOUT the df leg…
-    WinnowIndex.deleteStored(spark, fpDir, removed, dfPath = None)
-    // …then rebuild the side table from the surviving stored fingerprints
-    WinnowIndex.rebuildDfTable(spark, fpDir, dfDir)
     val fpSurv = Dedup.winnowFingerprints(
       docs.where(pmod(col("doc_id"), lit(11)) =!= 0),
       col("doc_id"), col("text"), k = 3, w = 4)
+    val fpDir = tmpDir("winnow-rec-fp")
+    val dfDir = tmpDir("winnow-rec-df")
+    // the crash shape the verb repairs: the fingerprint table already lost
+    // the %11 docs, the df side table still counts them (full corpus)
+    WinnowIndex.write(fpSurv, fpDir)
+    WinnowIndex.writeDfTable(WinnowIndex.dfTable(fp), dfDir)
+    // rebuild the side table from the surviving stored fingerprints
+    WinnowIndex.rebuildDfTable(spark, fpDir, dfDir)
     def dfRows(t: DataFrame): Set[(Long, Long)] =
       t.select(col("h"), col("df").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
