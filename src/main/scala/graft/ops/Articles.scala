@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
   *
   * Reference shape (`/root/reference/app/process_articles.py`):
   *   Kinesis envelope → cast(data as string) (l.62) → from_json (l.66) →
-  *   flatten (l.67) → to_timestamp(publish_date) (l.68) → words/word_count
+  *   flatten (l.67) → to_timestamp(publish_date) (l.68) → word_count
   *   (l.74-75) → watermark 10s (l.79) → groupBy(window 5m/1m, author) (l.80)
   *   → avg(word_count) (l.81) → project window.start/end (l.82) → parquet
   *   append (l.85-91).
@@ -56,11 +56,14 @@ object Articles {
       .withColumn("unique_id", expr("uuid()"))
       .withColumn("processing_timestamp", current_timestamp())
 
-  /** Enrichment: tokens + word count (`process_articles.py:74-75`). */
+  /** Enrichment: the word count (`process_articles.py:74-75`), as
+    * [[Text.wordCount]] — equal to the reference's `size(split(content,
+    * "\\s+"))` on every input, null for a null `content`. The reference's
+    * `words` array was only an intermediate that its sink never carried, so
+    * it is not built.
+    */
   def enrich(articles: DataFrame): DataFrame =
-    articles
-      .withColumn("words", Text.tokens(col("content")))
-      .withColumn("word_count", size(col("words")))
+    articles.withColumn("word_count", Text.wordCount(col("content")))
 
   /** The flagship aggregate: average word count per author per sliding
     * window (`process_articles.py:78-82`). Output schema matches the

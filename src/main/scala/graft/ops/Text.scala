@@ -22,7 +22,9 @@ object Text {
     * The oracle pairing (`split` vs `string_split_regex`) therefore assumes
     * the corpus is U+000B-free (verified for all testdata scale factors); a
     * corpus with vertical tabs would need the explicit class
-    * `[ \t\n\x0B\f\r]+` on the DuckDB side.
+    * `[ \t\n\x0B\f\r]+` on the DuckDB side. [[wordCount]]'s native kernel
+    * counts runs of that same Java byte set, U+000B included, so it equals
+    * `size(tokens(x))` on every input; the DuckDB twin SQL is unchanged.
     */
   val WhitespaceRegex = "\\s+"
 
@@ -39,8 +41,14 @@ object Text {
       graft.plans.NfcNormalize(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(text.cast("string"))))
 
-  /** Word count = token count (`process_articles.py:75`). */
-  def wordCount(text: Column): Column = size(tokens(text))
+  /** Word count = token count (`process_articles.py:75`): exactly
+    * `size(tokens(text))`, computed by the allocation-free byte loop
+    * graft.plans.WhitespaceTokenCount (no token array is built).
+    */
+  def wordCount(text: Column): Column =
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      graft.plans.WhitespaceTokenCount(
+        org.apache.spark.sql.graftbridge.ColumnBridge.expression(text.cast("string"))))
 
   // -------------------------------------------------------------------------
   // Readability (Flesch reading ease over heuristic syllables).
@@ -1737,7 +1745,7 @@ object Text {
       sep: String = "\n"): org.apache.spark.sql.DataFrame = {
     val lines = split(text, sep)
     val kept = filter(lines, l =>
-      substring(l, -1, 1).isin(".", "!", "?") && size(tokens(l)) >= minWords)
+      substring(l, -1, 1).isin(".", "!", "?") && wordCount(l) >= minWords)
     df.select(id.as("doc_id"),
       size(lines).cast("long").as("n_lines"),
       size(kept).cast("long").as("n_kept"),

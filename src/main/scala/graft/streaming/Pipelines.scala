@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.graftbridge.SessionBridge
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import graft.ops.Articles
 
 /** End-to-end streaming execution of the reference pipeline — the part of
@@ -20,8 +21,43 @@ import graft.ops.Articles
   *        deterministic stand-in for the reference's default microbatch loop);
   *  - S2/S4 parquet sink + checkpoint: exactly-once file output via the sink's
   *        commit log — restarting on the same checkpoint re-emits nothing.
+  *
+  * Every query here starts through [[start]], so consecutive queries of one
+  * session share one executor class loader and one codegen cache.
   */
 object Pipelines {
+
+  private val startLock = new Object
+
+  /** Start `ds`'s stream, configured by `writer`, on the caller's session.
+    *
+    * `start()` clones the caller's session for the stream. With artifact
+    * isolation on (Spark's default), the clone gets its own artifact UUID,
+    * executors build a new class loader for it, and the codegen cache —
+    * keyed by (class loader, code) — recompiles every generated class of a
+    * plan it has already compiled for the previous query. So while the
+    * caller's session holds no session-scoped artifacts, isolation is
+    * switched off on the caller's session around the synchronous `start()`
+    * only: the clone copies `false`, and its jobs run on the shared
+    * default loader. The lock covers save/set/start/restore, so concurrent
+    * starts cannot interleave and leave `false` behind; the previous value
+    * is restored, or unset, afterwards. A session holding artifacts keeps
+    * the isolated path, so a stream never loses a class its caller added.
+    * The query stays on the caller's `spark.streams`.
+    */
+  private def start[T](ds: Dataset[T])(
+      writer: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery = {
+    val w = writer(ds.writeStream)
+    val spark = ds.sparkSession
+    if (SessionBridge.holdsSessionArtifacts(spark)) w.start()
+    else startLock.synchronized {
+      val key = SessionBridge.IsolationKey
+      val prev = spark.conf.getAll.get(key)
+      spark.conf.set(key, "false")
+      try w.start()
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
 
   /** Run `Articles.pipeline` (parse → enrich → windowed avg per author) from
     * `source` to a parquet directory. Returns the started query; callers own
@@ -41,13 +77,12 @@ object Pipelines {
       outPath: String,
       checkpointPath: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    df.writeStream
+    start(df)(_
       .outputMode(OutputMode.Append())
       .format("parquet")
       .option("path", outPath)
       .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .start()
+      .trigger(trigger))
 
   /** Parse with a dead-letter side channel: parsed article rows stream to
     * `goodPath`, rows whose payload failed to parse (null `article_id` after
@@ -76,7 +111,7 @@ object Pipelines {
       .select(col("raw_data"), from_json(col("raw_data"), Articles.payloadSchema).as("article"))
       .select(col("raw_data"), col("article.*"))
       .withColumn("publish_date", try_to_timestamp(col("publish_date")))
-    withRaw.writeStream
+    start(withRaw)(_
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointPath)
       .trigger(trigger)
@@ -95,8 +130,7 @@ object Pipelines {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id").parquet(badPath)
         ()
-      }
-      .start()
+      })
   }
 
   /** Streaming ANN-index maintenance — the daily-ingest encode+append path
@@ -131,7 +165,7 @@ object Pipelines {
       checkpointPath: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import org.apache.spark.sql.functions.lit
-    vectors.writeStream
+    start(vectors)(_
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointPath)
       .trigger(trigger)
@@ -203,8 +237,7 @@ object Pipelines {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id").parquet(deltaPath)
         ()
-      }
-      .start()
+      })
   }
 
   /** Streaming ingest INTO a [[graft.ops.SnapTables]] snapshot table — each
@@ -234,7 +267,7 @@ object Pipelines {
       checkpointPath: String,
       xform: DataFrame => DataFrame = identity,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    rows.writeStream
+    start(rows)(_
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointPath)
       .trigger(trigger)
@@ -246,6 +279,5 @@ object Pipelines {
         graft.ops.SnapTables.appendBatch(batch.sparkSession, path, partCol,
           xform(batch.toDF()), batchId, streamId = Some(checkpointPath))
         ()
-      }
-      .start()
+      })
 }

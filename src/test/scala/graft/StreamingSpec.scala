@@ -1,12 +1,14 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.graftbridge.SessionBridge
+import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
-import graft.ops.Articles
+import graft.ops.{Articles, DataGen}
 import graft.streaming.{KinesisEnvelope, Pipelines, StreamSource}
 
 /** The engine's streaming execution path, end to end — the semantics the
@@ -56,6 +58,24 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         org.apache.spark.sql.types.StructField("author", org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("average_word_count", org.apache.spark.sql.types.DoubleType)
       ))).parquet(path))
+
+  /** A seeded article backlog as parquet envelopes, and its batch twin. */
+  private def backlog(n: Long): (String, Set[(Timestamp, Timestamp, String, Double)]) = {
+    val dir = tmpDir("stream-backlog")
+    DataGen.articles(spark, n).write.mode("overwrite").parquet(dir)
+    (dir, collectWindows(Articles.pipeline(spark.read.parquet(dir))))
+  }
+
+  /** One AvailableNow drain of `envDir` into a fresh sink; (run id, sink). */
+  private def drain(session: SparkSession, envDir: String): (java.util.UUID, String) = {
+    val out = tmpDir("stream-drain-out")
+    val q = Pipelines.articlesToParquet(session, StreamSource.FileEnvelopeSource(envDir),
+      out, tmpDir("stream-drain-ckpt"))
+    q.awaitTermination()
+    (q.runId, out)
+  }
+
+  private val isolationKey = SessionBridge.IsolationKey
 
   // -------------------------------------------------------------------------
 
@@ -377,6 +397,93 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       (ts("2024-01-01 10:05:00"), ts("2024-01-01 10:06:00"), "alice", 1L, 7L))
     assert(got == expected,
       s"finalized gap-merged sessions only (open zed session withheld): $got")
+  }
+
+  test("consecutive drains on one session share the codegen cache: the second compiles nothing") {
+    val (envDir, twin) = backlog(2000)
+    val progressed = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progressed.add(e.progress.runId)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val (run1, out1) = drain(spark, envDir)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (run2, out2) = drain(spark, envDir)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      assert(compiled == 0L,
+        s"the second drain of the same plan compiled $compiled classes: its executor class loader is not the first's")
+      assert(readOut(out1) == twin && twin.nonEmpty)
+      assert(readOut(out2) == twin)
+      // the queries stay on the caller's StreamingQueryManager
+      val deadline = System.currentTimeMillis() + 10000
+      while (!(progressed.contains(run1) && progressed.contains(run2)) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(progressed.contains(run1) && progressed.contains(run2),
+        "a listener on the caller's spark.streams must see progress of both queries")
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("concurrent starts on one session leave the caller's isolation setting as it was") {
+    val (envDir, twin) = backlog(1000)
+    val original = spark.conf.getAll.get(isolationKey)
+    try {
+      Seq(Some("true"), None).foreach { preset =>
+        preset.fold(spark.conf.unset(isolationKey))(spark.conf.set(isolationKey, _))
+        val before = spark.conf.getAll.get(isolationKey)
+        assert(before == preset)
+        val barrier = new java.util.concurrent.CyclicBarrier(2)
+        val sinks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+        val threads = (1 to 2).map { _ =>
+          new Thread(() => {
+            try { barrier.await(); sinks.add(drain(spark, envDir)._2) }
+            catch { case t: Throwable => errors.add(t) }
+          })
+        }
+        threads.foreach(_.start())
+        threads.foreach(_.join())
+        assert(errors.isEmpty, s"preset $preset: ${errors.toArray.mkString("; ")}")
+        assert(sinks.size == 2)
+        sinks.forEach(out => assert(readOut(out) == twin, s"preset $preset: sink $out"))
+        assert(spark.conf.getAll.get(isolationKey) == before,
+          s"preset $preset: the caller's $isolationKey changed")
+      }
+    } finally original.fold(spark.conf.unset(isolationKey))(spark.conf.set(isolationKey, _))
+  }
+
+  test("a session holding artifacts keeps the isolated stream path; the caller's conf never changes") {
+    val (envDir, twin) = backlog(500)
+    /** Drain on `session`; the isolation setting of the stream's own session. */
+    def streamIsolation(session: SparkSession): String = {
+      val before = session.conf.getAll.get(isolationKey)
+      val out = tmpDir("stream-guard-out")
+      val q = Pipelines.articlesToParquet(session, StreamSource.FileEnvelopeSource(envDir),
+        out, tmpDir("stream-guard-ckpt"))
+      q.awaitTermination()
+      assert(session.conf.getAll.get(isolationKey) == before, "the caller's conf changed")
+      assert(readOut(out) == twin)
+      SessionBridge.streamSession(q).conf.get(isolationKey)
+    }
+
+    val plain = spark.newSession()
+    assert(!SessionBridge.holdsSessionArtifacts(plain))
+    assert(streamIsolation(plain) == "false")
+
+    val jar = java.nio.file.Paths.get(tmpDir("stream-guard-jar"), "graft-probe.jar")
+    val jos = new java.util.jar.JarOutputStream(java.nio.file.Files.newOutputStream(jar))
+    try {
+      jos.putNextEntry(new java.util.jar.JarEntry("graft-probe.txt"))
+      jos.write("probe".getBytes("UTF-8"))
+      jos.closeEntry()
+    } finally jos.close()
+    val withJar = spark.newSession()
+    withJar.addArtifact(jar.toString)
+    assert(SessionBridge.holdsSessionArtifacts(withJar))
+    assert(streamIsolation(withJar) == "true")
   }
 
   test("streaming plan carries EventTimeWatermark + stateful aggregation (W1/W5)") {

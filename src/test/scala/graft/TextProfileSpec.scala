@@ -7,8 +7,8 @@ import graft.ops.Text
 
 /** The one-pass TextProfile must reproduce every composed-builtin feature it
   * replaced (language marker hits, stopword hits, token count, alpha chars),
-  * and the RegexpMatchCount native must equal the materializing composed
-  * form. The optimizer rule is checked on real plans.
+  * and the RegexpMatchCount and WhitespaceTokenCount natives must equal the
+  * materializing composed forms. The optimizer rule is checked on real plans.
   */
 class TextProfileSpec extends AnyFunSuite with SparkSpec {
 
@@ -25,6 +25,17 @@ class TextProfileSpec extends AnyFunSuite with SparkSpec {
     (Gen.listOfN(300, doc).sample.get :+ "" :+ "the de la of und est").distinct
   }
 
+  /** Edge inputs for the whitespace token count: each of Java's six `\s`
+    * bytes (U+000B included) alone and between words; wider Unicode spaces
+    * that Java's `\s` does not match (NBSP, NEL, U+2028, U+3000); multibyte
+    * words; empty and whitespace-only text; leading and trailing runs.
+    */
+  private val wsEdges: Seq[String] =
+    Seq(" ", "\t", "\n", "\u000B", "\f", "\r").flatMap(w => Seq(w, s"a${w}b", s"a$w$w${w}b")) ++
+      Seq("a\u00A0b", "a\u0085b", "a\u2028b", "a\u3000b", "\u00A0", "\u3000 \u2028",
+        "中文 ñandú  日本語", "é\tü\u000Bß", "", "   ", " \t\n\u000B\f\r ",
+        "  lead", "trail \t", " both ", "\u000Bvt\u000B")
+
   test("profile features == composed builtins on generated texts") {
     import spark.implicits._
     val p = Text.profile(col("t"))
@@ -32,22 +43,46 @@ class TextProfileSpec extends AnyFunSuite with SparkSpec {
       Seq(p.getItem(i).as(s"n_$lang"),
         Text.markerHitsComposed(col("t"), m).as(s"c_$lang"))
     }
-    val rows = genDocs.toDF("t").select(
-      langCols ++ Seq(
-        p.getItem(5).as("n_stop"),
-        Text.markerHitsComposed(col("t"), Text.Stopwords).as("c_stop"),
-        p.getItem(6).as("n_tok"),
-        size(split(col("t"), "\\s+")).as("c_tok"),
-        p.getItem(7).as("n_alpha"),
-        length(regexp_replace(col("t"), "[^A-Za-z]", "")).as("c_alpha"),
-        col("t")): _*).collect()
-    rows.foreach { r =>
-      (0 until 6).foreach { i =>
-        assert(r.getInt(2 * i) == r.getInt(2 * i + 1),
-          s"marker set $i mismatch for '${r.getString(16)}'")
+    val cols = langCols ++ Seq(
+      p.getItem(5).as("n_stop"),
+      Text.markerHitsComposed(col("t"), Text.Stopwords).as("c_stop"),
+      p.getItem(6).as("n_tok"),
+      size(split(col("t"), "\\s+")).as("c_tok"),
+      p.getItem(7).as("n_alpha"),
+      length(regexp_replace(col("t"), "[^A-Za-z]", "")).as("c_alpha"),
+      Text.wordCount(col("t")).as("n_wc"),
+      size(split(col("t"), "\\s+")).as("c_wc"),
+      col("t"))
+    val texts = (genDocs ++ wsEdges).map(Option(_)) :+ None
+    // A local relation is evaluated by the optimizer (interpreted); the
+    // parquet-backed frame runs the generated code.
+    val dir = tmpDir("text-profile")
+    texts.toDF("t").write.mode("overwrite").parquet(dir)
+    val stored = spark.read.parquet(dir).select(cols: _*)
+    assert(stored.queryExecution.executedPlan
+      .exists(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]))
+    val interpreted = graft.plans.WhitespaceTokenCount(
+      org.apache.spark.sql.catalyst.expressions.BoundReference(
+        0, org.apache.spark.sql.types.StringType, nullable = true))
+    Seq(texts.toDF("t").select(cols: _*), stored).foreach { df =>
+      val rows = df.collect()
+      assert(rows.length == texts.length)
+      rows.foreach { r =>
+        val t = Option(r.getString(18))
+        val shown = t.fold("null")(x => s"'${x.flatMap(c => if (c < ' ') f"\\u${c.toInt}%04x" else c.toString)}'")
+        t.foreach { _ =>
+          (0 until 6).foreach { i =>
+            assert(r.getInt(2 * i) == r.getInt(2 * i + 1), s"marker set $i mismatch for $shown")
+          }
+          assert(r.getInt(12) == r.getInt(13), s"token count mismatch for $shown")
+          assert(r.getInt(14) == r.getInt(15), s"alpha mismatch for $shown")
+        }
+        assert(r.get(16) == r.get(17), s"word count mismatch for $shown")
+        assert(interpreted.eval(org.apache.spark.sql.catalyst.InternalRow(
+          t.map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull)) == r.get(17),
+          s"interpreted word count mismatch for $shown")
       }
-      assert(r.getInt(12) == r.getInt(13), s"token count mismatch for '${r.getString(16)}'")
-      assert(r.getInt(14) == r.getInt(15), s"alpha mismatch for '${r.getString(16)}'")
+      assert(rows.exists(r => r.isNullAt(18) && r.isNullAt(16) && r.isNullAt(17)))
     }
   }
 
